@@ -57,8 +57,8 @@ def template_expr(
 ) -> Column:
     """Column-expression form: render the template for every row at once.
 
-    ``values`` maps field name -> Column (nullable). NULL leaves the slot
-    in place, mirroring the reference's None-skip semantics. Python-mode
+    ``values`` maps field name -> Column (nullable). A NULL value renders
+    as the slot itself, mirroring the reference's None-skip. Python-mode
     quoting replicates CPython ``repr`` for printable strings: backslash
     escaped first, then double-quote wrapping when the value contains a
     single quote but no double quote, else single-quote wrapping with
@@ -79,7 +79,6 @@ def template_expr(
             v.contains("'") & ~v.contains('"'), double_quoted
         ).otherwise(single_quoted)
         quoted = F.when(method == "python", reprd).otherwise(v)
-        out = F.when(v.isNull(), out).otherwise(
-            F.replace(out, F.lit("{{ " + field + " }}"), quoted)
-        )
+        slot = F.lit("{{ " + field + " }}")
+        out = F.replace(out, slot, F.coalesce(quoted, slot))
     return out

@@ -19,13 +19,26 @@ zero Python), which is why the same pipeline holds at 100 TB of files.
 
 from __future__ import annotations
 
+import contextlib
+import os
+import shutil
+import subprocess
+import tempfile
+
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from metadata_extractors_api_spark.functions.template import template_expr
+from metadata_extractors_api_spark.plans.extractors_fixture import (
+    EXTRACT_CHANNELS,
+    EXTRACT_POINTS,
+    execute_python_call,
+)
 from metadata_extractors_api_spark.registry import register
 from metadata_extractors_api_spark.sources import registry as reg
+from metadata_extractors_api_spark.sources.registry_fetch import load_snapshot
 from metadata_extractors_api_spark.catalog import session_key
 
 
@@ -48,11 +61,27 @@ def default_output_path(path: Column) -> Column:
     return F.concat(F.regexp_replace(path, r"\.[^.]+$", ""), F.lit(".json"))
 
 
-def render_command(command: Column, method: Column, values: dict[str, Column]) -> Column:
-    """A8 command templating, python-mode repr quoting, NULL-skip."""
-    from metadata_extractors_api_spark.functions.template import template_expr
+def _render() -> tuple[Column, Column]:
+    """A8/A9 over the columns path, filetype_id, template, method and
+    command: (output_path, rendered command). Like the reference's
+    apply_template_args, the supported-filetype template overrides ALL
+    four fields unless the entry is absent or '' (falsy fallback)."""
+    def _override(field: str, default: Column | None) -> Column:
+        o = F.nullif(F.try_element_at(F.col("template"), F.lit(field)), F.lit(""))
+        return F.coalesce(o, default) if default is not None else o
 
-    return template_expr(command, method, values)
+    out_path = _override("output_path", default_output_path(F.col("path")))
+    rendered = template_expr(
+        F.col("command"),
+        F.col("method"),
+        {
+            "input_type": _override("input_type", F.col("filetype_id")),
+            "input_path": _override("input_path", F.col("path")),
+            "output_type": _override("output_type", None),  # no local default
+            "output_path": out_path,
+        },
+    )
+    return out_path, rendered
 
 
 def resolve(spark: SparkSession, files: DataFrame, filetypes: DataFrame,
@@ -94,27 +123,7 @@ def resolve(spark: SparkSession, files: DataFrame, filetypes: DataFrame,
         usage.getField("setup").alias("setup"),
         usage.getField("command").alias("command"),
     )
-    # A8/apply_template_args applies the supported-filetype template
-    # override (with falsy fallback) to ALL four fields, not just
-    # input_type -- mirror that: override wins unless absent or ''.
-    def _override(field: str, default: Column | None) -> Column:
-        o = F.nullif(F.try_element_at(F.col("template"), F.lit(field)), F.lit(""))
-        return F.coalesce(o, default) if default is not None else o
-
-    out_path = _override("output_path", default_output_path(F.col("path")))
-    eff_input_type = _override("input_type", F.col("filetype_id"))
-    eff_input_path = _override("input_path", F.col("path"))
-    eff_output_type = _override("output_type", None)  # no local default
-    rendered = render_command(
-        F.col("command"),
-        F.col("method"),
-        {
-            "input_type": eff_input_type,
-            "input_path": eff_input_path,
-            "output_type": eff_output_type,
-            "output_path": out_path,
-        },
-    )
+    out_path, rendered = _render()
     return step4.select(
         "file_id",
         "path",
@@ -290,28 +299,13 @@ def _roundtrip_snapshot(
     spark: SparkSession, ft_df: DataFrame, ex_df: DataFrame, tag: str
 ) -> tuple[DataFrame, DataFrame]:
     """Serialize one registry snapshot as JSON lines (the wire shape
-    the reference serves over HTTP, __init__.py:104), re-read it as
-    untyped text, and cast it into the declared StructTypes at the
-    boundary (from_json — the scan_registry_json path)."""
-    import os
-    import tempfile
-
+    the reference serves over HTTP, __init__.py:104) and re-read it
+    through ``load_snapshot`` (untyped text cast into the declared
+    StructTypes at the boundary)."""
     base = tempfile.mkdtemp(prefix=f"mdx_regjson_{tag}_")
-    ft_dir = os.path.join(base, "filetypes")
-    ex_dir = os.path.join(base, "extractors")
-    ft_df.coalesce(1).write.json(ft_dir)
-    ex_df.coalesce(1).write.json(ex_dir)
-    ft2 = (
-        spark.read.text(ft_dir)
-        .select(F.from_json("value", reg.FILETYPES_SCHEMA).alias("e"))
-        .select("e.*")
-    )
-    ex2 = (
-        spark.read.text(ex_dir)
-        .select(F.from_json("value", reg.EXTRACTORS_SCHEMA).alias("e"))
-        .select("e.*")
-    )
-    return ft2, ex2
+    ft_df.coalesce(1).write.json(os.path.join(base, "filetypes"))
+    ex_df.coalesce(1).write.json(os.path.join(base, "extractors"))
+    return load_snapshot(spark, base)
 
 
 @register("extract_dispatch_roundtrip", oracle=_DISPATCH_ORACLE)
@@ -433,16 +427,42 @@ def extract_dispatch_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _RUN_SCHEMA = "file_id long, method string, channel string, point int, value double"
 
+# The extraction output contract (extract_validate_outputs,
+# extract_dead_letter, extract_test_sweep): every row has a declared
+# channel, a point in [0, EXTRACT_POINTS) and a non-null non-negative
+# value, and a file has one row per (channel, point).
+ROWS_PER_FILE = len(EXTRACT_CHANNELS) * EXTRACT_POINTS
+
+
+def _rows_ok(rows) -> bool:
+    """The contract over one file's (channel, point, value) rows."""
+    return len(rows) == ROWS_PER_FILE and all(
+        ch in EXTRACT_CHANNELS and 0 <= pt < EXTRACT_POINTS
+        and val is not None and val >= 0
+        for ch, pt, val in rows
+    )
+
+
+def _contract_rollup(runs: DataFrame, *keys: str) -> DataFrame:
+    """The contract over execution output rolled up per key: row count,
+    contract-valid row count and the verdict."""
+    ok = (
+        F.col("value").isNotNull()
+        & (F.col("value") >= 0)
+        & F.col("point").between(0, EXTRACT_POINTS - 1)
+        & F.col("channel").isin(*EXTRACT_CHANNELS)
+    )
+    n_points, n_valid = F.col("n_points"), F.col("n_valid")
+    return runs.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n_points"),
+        F.sum(ok.cast("int")).cast("bigint").alias("n_valid"),
+    ).withColumn("valid", (n_points == n_valid) & (n_points == ROWS_PER_FILE))
+
 
 def _cli_shim_source() -> str:
     """Source of the ``csvx`` stand-in extractor binary the cli path
     executes (the fixture registry's cli command). Deterministic output
     from its argv so the subprocess round-trip is oracle-checkable."""
-    from metadata_extractors_api_spark.plans.extractors_fixture import (
-        EXTRACT_CHANNELS,
-        EXTRACT_POINTS,
-    )
-
     return (
         "#!/usr/bin/env python3\n"
         "import sys\n"
@@ -456,66 +476,96 @@ def _cli_shim_source() -> str:
     )
 
 
+@contextlib.contextmanager
+def _executor():
+    """The one per-row executor, used inside a Python worker for one
+    partition: ``invoke(method, setup, rendered)`` runs a python row by
+    in-process dynamic invocation (the reference's ``_execute_python``,
+    __init__.py:370-399) and returns its rows, and any other row
+    through one ``sh -c`` per file (``_execute_cli``,
+    __init__.py:296-306) and returns its stdout. It raises when the
+    call raises or the command exits non-zero. The ``csvx`` shim is
+    written when the first cli row arrives, into a directory removed
+    when the partition ends."""
+    shim_dir = None
+    env = None
+
+    def invoke(method, setup, rendered):
+        nonlocal shim_dir, env
+        if method == "python":
+            return execute_python_call(rendered, setup)
+        if shim_dir is None:
+            shim_dir = tempfile.mkdtemp(prefix="mdx_cli_shim_")
+            shim = os.path.join(shim_dir, "csvx")
+            with open(shim, "w") as fh:
+                fh.write(_cli_shim_source())
+            os.chmod(shim, 0o755)
+            env = dict(os.environ)
+            env["PATH"] = shim_dir + os.pathsep + env.get("PATH", "")
+        return subprocess.run(
+            ["/bin/sh", "-c", rendered],
+            capture_output=True,
+            text=True,
+            env=env,
+            check=True,
+        ).stdout
+
+    try:
+        yield invoke
+    finally:
+        if shim_dir is not None:
+            shutil.rmtree(shim_dir, ignore_errors=True)
+
+
+def _parse(method, raw) -> list:
+    """Typed (channel, point, value) rows of one invocation's output."""
+    if method == "python":
+        return raw
+    rows = []
+    for line in raw.splitlines():
+        ch, pt, val = line.split(",")
+        rows.append((ch, int(pt), float(val)))
+    return rows
+
+
+def _sweep_status(invoke, method, setup, rendered) -> str:
+    """Testing-mode verdict for one (extractor, file) pair: ``error``
+    when the invocation fails, ``fail`` when it ran but its output
+    cannot be parsed or breaks the contract, else ``pass``."""
+    try:
+        raw = invoke(method, setup, rendered)
+    except Exception:
+        return "error"
+    try:
+        return "pass" if _rows_ok(_parse(method, raw)) else "fail"
+    except Exception:
+        return "fail"
+
+
 def execute_dispatched(dispatched: DataFrame) -> DataFrame:
     """Execute a dispatch-ready relation (file_id, method, setup,
-    rendered): python rows by in-process dynamic invocation, cli rows
-    by subprocess — the shared A15/A16/EP2 execution stage used by the
-    batch query (extract_run) and its streaming twin
-    (stream_extract_run)."""
-    from metadata_extractors_api_spark.plans.extractors_fixture import (
-        execute_python_call,
-    )
+    rendered) in ONE Python worker pass: each row is routed on its
+    method through the shared per-row executor (python rows in-process,
+    cli rows by subprocess) and rows of any other or NULL method drop
+    out. The shared A15/A16/EP2 execution stage of the batch query
+    (extract_run) and its streaming twin (stream_extract_run)."""
 
-    shim_source = _cli_shim_source()
-
-    def run_python(batches):
-        for pdf in batches:
-            out = []
-            for fid, setup, rendered in zip(
-                pdf["file_id"], pdf["setup"], pdf["rendered"]
-            ):
-                for ch, pt, val in execute_python_call(rendered, setup):
-                    out.append((fid, "python", ch, pt, val))
-            yield pd.DataFrame(
-                out, columns=["file_id", "method", "channel", "point", "value"]
-            )
-
-    def run_cli(batches):
-        import os
-        import subprocess
-        import tempfile
-
-        shim_dir = tempfile.mkdtemp(prefix="mdx_cli_shim_")
-        shim = os.path.join(shim_dir, "csvx")
-        with open(shim, "w") as fh:
-            fh.write(shim_source)
-        os.chmod(shim, 0o755)
-        env = dict(os.environ)
-        env["PATH"] = shim_dir + os.pathsep + env.get("PATH", "")
-        for pdf in batches:
-            out = []
-            for fid, rendered in zip(pdf["file_id"], pdf["rendered"]):
-                res = subprocess.run(
-                    ["/bin/sh", "-c", rendered],
-                    capture_output=True,
-                    text=True,
-                    env=env,
-                    check=True,
+    def run(batches):
+        with _executor() as invoke:
+            for pdf in batches:
+                out = []
+                for fid, method, setup, rendered in zip(
+                    pdf["file_id"], pdf["method"], pdf["setup"], pdf["rendered"]
+                ):
+                    for ch, pt, val in _parse(method, invoke(method, setup, rendered)):
+                        out.append((fid, method, ch, pt, val))
+                yield pd.DataFrame(
+                    out, columns=["file_id", "method", "channel", "point", "value"]
                 )
-                for line in res.stdout.splitlines():
-                    ch, pt, val = line.split(",")
-                    out.append((fid, "cli", ch, int(pt), float(val)))
-            yield pd.DataFrame(
-                out, columns=["file_id", "method", "channel", "point", "value"]
-            )
 
-    py = dispatched.filter(F.col("method") == "python").mapInPandas(
-        run_python, _RUN_SCHEMA
+    return dispatched.filter(F.col("method").isin("python", "cli")).mapInPandas(
+        run, _RUN_SCHEMA
     )
-    cli = dispatched.filter(F.col("method") == "cli").mapInPandas(
-        run_cli, _RUN_SCHEMA
-    )
-    return py.unionByName(cli)
 
 
 @register(
@@ -545,7 +595,8 @@ def execute_dispatched(dispatched: DataFrame) -> DataFrame:
 )
 def extract_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A15/A16/EP2 execution: every dispatched file is EXECUTED, not
-    simulated.
+    simulated, in one ``execute_dispatched`` pass that routes each row
+    on its method.
 
     python rows (A16, reference ``_execute_python`` __init__.py:370-399):
     the worker parses the RENDERED call string, resolves the registry's
@@ -605,20 +656,7 @@ def extract_validate_outputs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the extraction output stream plus one map-side-combinable rollup
     on the extraction's own (file, method) key -- no second pass over
     inputs, no driver-side checks."""
-    runs = extract_run(spark, sf_dir)
-    ok = (
-        F.col("value").isNotNull()
-        & (F.col("value") >= 0)
-        & F.col("point").between(0, 4)
-        & F.col("channel").isin("Ewe", "I", "cycle")
-    )
-    n_valid = F.sum(ok.cast("int")).cast("bigint")
-    n_points = F.count(F.lit(1))
-    return runs.groupBy("file_id", "method").agg(
-        n_points.alias("n_points"),
-        n_valid.alias("n_valid"),
-        ((n_points == n_valid) & (n_points == F.lit(15))).alias("valid"),
-    )
+    return _contract_rollup(extract_run(spark, sf_dir), "file_id", "method")
 
 
 from metadata_extractors_api_spark.plans import detect_filetype as _detect
@@ -676,22 +714,9 @@ def extract_dead_letter(spark: SparkSession, sf_dir: str) -> DataFrame:
         dispatched.filter(F.col("extractor_id").isNull())
         .select("file_id", "path", F.lit("no_extractor").alias("reason"))
     )
-    runs = extract_run(spark, sf_dir)
-    ok = (
-        F.col("value").isNotNull()
-        & (F.col("value") >= 0)
-        & F.col("point").between(0, 4)
-        & F.col("channel").isin("Ewe", "I", "cycle")
-    )
     invalid = (
-        runs.groupBy("file_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.sum(ok.cast("int")).alias("n_valid"),
-        )
-        .filter(
-            (F.col("n_points") != 15) | (F.col("n_valid") != F.col("n_points"))
-        )
+        _contract_rollup(extract_run(spark, sf_dir), "file_id")
+        .filter(~F.col("valid"))
         .select(
             "file_id",
             F.lit(None).cast("string").alias("path"),
@@ -787,7 +812,6 @@ def extract_test_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = pick_usage(F.col("usage"), "python")
     paired = files.join(F.broadcast(sup), "filetype_id").select(
         "extractor_id",
-        "file_id",
         "path",
         "filetype_id",
         "template",
@@ -795,88 +819,22 @@ def extract_test_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         u.getField("setup").alias("setup"),
         u.getField("command").alias("command"),
     )
-
-    def _override(field: str, default):
-        o = F.nullif(
-            F.try_element_at(F.col("template"), F.lit(field)), F.lit("")
-        )
-        return F.coalesce(o, default) if default is not None else o
-
-    rendered = render_command(
-        F.col("command"),
-        F.col("method"),
-        {
-            "input_type": _override("input_type", F.col("filetype_id")),
-            "input_path": _override("input_path", F.col("path")),
-            "output_type": _override("output_type", None),
-            "output_path": _override(
-                "output_path", default_output_path(F.col("path"))
-            ),
-        },
-    )
     todo = paired.select(
-        "extractor_id", "file_id", "method", "setup", rendered.alias("rendered")
+        "extractor_id", "method", "setup", _render()[1].alias("rendered")
     )
-    shim_source = _cli_shim_source()
-
-    def _valid(rows) -> bool:
-        if len(rows) != 15:
-            return False
-        return all(
-            ch in ("Ewe", "I", "cycle")
-            and 0 <= int(pt) <= 4
-            and val is not None
-            and float(val) >= 0
-            for ch, pt, val in rows
-        )
 
     def run_sweep(batches):
-        import os
-        import subprocess
-        import tempfile
-
-        from metadata_extractors_api_spark.plans.extractors_fixture import (
-            execute_python_call,
-        )
-
-        shim_dir = tempfile.mkdtemp(prefix="mdx_sweep_shim_")
-        shim = os.path.join(shim_dir, "csvx")
-        with open(shim, "w") as fh:
-            fh.write(shim_source)
-        os.chmod(shim, 0o755)
-        env = dict(os.environ)
-        env["PATH"] = shim_dir + os.pathsep + env.get("PATH", "")
-        for pdf in batches:
-            out = []
-            for eid, method, setup, rendered in zip(
-                pdf["extractor_id"], pdf["method"], pdf["setup"], pdf["rendered"]
-            ):
-                if method == "python":
-                    try:
-                        rows = execute_python_call(rendered, setup)
-                        status = "pass" if _valid(rows) else "fail"
-                    except Exception:
-                        status = "error"
-                else:
-                    res = subprocess.run(
-                        ["/bin/sh", "-c", rendered],
-                        capture_output=True,
-                        text=True,
-                        env=env,
+        with _executor() as invoke:
+            for pdf in batches:
+                status = [
+                    _sweep_status(invoke, method, setup, rendered)
+                    for method, setup, rendered in zip(
+                        pdf["method"], pdf["setup"], pdf["rendered"]
                     )
-                    if res.returncode != 0:
-                        status = "error"
-                    else:
-                        try:
-                            rows = [
-                                tuple(line.split(","))
-                                for line in res.stdout.splitlines()
-                            ]
-                            status = "pass" if _valid(rows) else "fail"
-                        except Exception:
-                            status = "fail"
-                out.append((eid, status))
-            yield pd.DataFrame(out, columns=["extractor_id", "status"])
+                ]
+                yield pd.DataFrame(
+                    {"extractor_id": pdf["extractor_id"], "status": status}
+                )
 
     executed = todo.mapInPandas(run_sweep, "extractor_id string, status string")
     s = F.col("status")

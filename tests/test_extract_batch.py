@@ -4,11 +4,21 @@ extractor, preferred-mode switching, and the Engine facade."""
 
 from __future__ import annotations
 
+import glob
+import os
+import tempfile
+
 from pyspark.sql import functions as F
 
 import metadata_extractors_api_spark as mdx
 from metadata_extractors_api_spark.engine import Engine
-from metadata_extractors_api_spark.plans.extract_batch import extract_batch, resolve
+from metadata_extractors_api_spark.plans.extract_batch import (
+    _executor,
+    _sweep_status,
+    execute_dispatched,
+    extract_batch,
+    resolve,
+)
 from metadata_extractors_api_spark.sources import registry as reg
 
 
@@ -135,3 +145,41 @@ def test_template_override_applies_to_all_fields(spark):
     )
     assert out["rendered"] == "csvx /override/in.csv /data/table.json"
     assert out["output_path"] == "/data/table.json"
+
+
+def _fixture_todo(spark, sf_dir):
+    return mdx.QUERIES["extract_dispatch"](spark, sf_dir).select(
+        "file_id", "method", "setup", "rendered"
+    )
+
+
+def test_execute_dispatched_is_one_python_pass(spark, sf_dir):
+    """python and cli rows share one MapInPandas: no per-method branch
+    and no union re-running the dispatch plan."""
+    runs = execute_dispatched(_fixture_todo(spark, sf_dir))
+    plan = runs._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("MapInPandas") == 1
+    assert "Union" not in plan
+
+
+def test_sweep_status_classes():
+    """A python call that raises or a non-zero exit is an error; output
+    that ran but breaks the contract is a fail."""
+    with _executor() as invoke:
+        assert _sweep_status(invoke, "cli", None, "exit 3") == "error"
+        assert _sweep_status(invoke, "cli", None, "echo a,b") == "fail"
+        assert _sweep_status(
+            invoke, "cli", None, "csvx /data/table.csv /data/table.json"
+        ) == "pass"
+        assert _sweep_status(
+            invoke, "python", "yadg", "yadg.missing.fn('x')"
+        ) == "error"
+
+
+def test_cli_rows_leave_no_shim_dir(spark, sf_dir):
+    pattern = os.path.join(tempfile.gettempdir(), "mdx_*shim_*")
+    before = set(glob.glob(pattern))
+    cli = _fixture_todo(spark, sf_dir).filter(F.col("method") == "cli")
+    rows = execute_dispatched(cli).collect()
+    assert rows and {r["method"] for r in rows} == {"cli"}
+    assert set(glob.glob(pattern)) <= before

@@ -144,6 +144,43 @@ def test_template_expr_matches_repr(spark):
         assert got[t] == want == f"run {t!r}"
 
 
+@pytest.mark.parametrize("method", ["python", "cli"])
+def test_template_expr_matches_apply_for_every_null_pattern(spark, method):
+    """All 16 NULL/non-NULL patterns of the four slots render the same
+    in column form as in the row-at-a-time reference port."""
+    from pyspark.sql import functions as F
+
+    from metadata_extractors_api_spark.functions.template import (
+        FIELDS,
+        apply_template_args,
+        template_expr,
+    )
+
+    command = (
+        "x {{ input_type }} {{ input_path }} {{ output_type }}"
+        " {{ output_path }} {{ input_path }}"
+    )
+    values = ("it's.mpr", 'say "hi"', "back\\slash", "plain.json")
+    patterns = [
+        tuple(v if mask >> i & 1 else None for i, v in enumerate(values))
+        for mask in range(16)
+    ]
+    df = spark.createDataFrame(
+        [(mask, *p) for mask, p in enumerate(patterns)],
+        "mask int, " + ", ".join(f"{f} string" for f in FIELDS),
+    )
+    got = dict(
+        df.select(
+            "mask",
+            template_expr(
+                F.lit(command), F.lit(method), {f: F.col(f) for f in FIELDS}
+            ),
+        ).collect()
+    )
+    for mask, p in enumerate(patterns):
+        assert got[mask] == apply_template_args(command, method, *p), p
+
+
 def test_asof_nearest_prefers_closer_forward_click(spark, tmp_path_factory):
     """A purchase with a click 10s before and 2s after must pair with
     the AFTER click; equal distances must prefer the backward click."""
